@@ -137,52 +137,14 @@ class ShardedBloom:
                 self.shards[key].merge(shard)
             else:
                 # copy — adopting a live reference would alias later in-place
-                # add_local mutations back into the source filter (the same
-                # hazard ADVICE r5 flagged on the cuckoo twin)
+                # add_local mutations back into the source filter
                 self.shards[key] = BloomShard(shard.m, shard.k, shard.bits.copy())
 
     def add_local(self, shard_key: str, hashes: Iterable[int]) -> None:
         m, k = _params(self.expected_per_shard, self.fpp)
-        arr = (
-            hashes
-            if isinstance(hashes, np.ndarray)
-            else np.fromiter(hashes, dtype=np.int64)
+        self.shards.setdefault(shard_key, BloomShard(m, k)).add_hashes(
+            np.asarray(hashes, dtype=np.int64)
         )
-        self.shards.setdefault(shard_key, BloomShard(m, k)).add_hashes(arr)
-
-    @staticmethod
-    def collect_hash_deltas(
-        df: DataFrame,
-        key_col: str = "url_hash64",
-        shard_col: str = "domain_salt",
-    ) -> dict[str, np.ndarray]:
-        """Per-shard raw key hashes of a round's insert delta, built
-        distributed (one Arrow group per shard, hashes packed to bytes) and
-        collected as O(new URLs × 8 B) — the transport for
-        :class:`BloomBroadcastChain` deltas. At 10^10 seen URLs the full
-        filter is ~GBs; a round's delta is its new-key hashes, typically
-        10^3-10^6 × smaller — that asymmetry is the whole point."""
-
-        def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "shard": [pdf[shard_col].iloc[0]],
-                    "hashes": [
-                        pdf[key_col].to_numpy(dtype=np.int64).tobytes()
-                    ],
-                }
-            )
-
-        rows = (
-            df.select(shard_col, key_col)
-            .groupBy(shard_col)
-            .applyInPandas(_pack, schema="shard string, hashes binary")
-            .collect()
-        )
-        return {
-            r["shard"]: np.frombuffer(bytes(r["hashes"]), dtype=np.int64)
-            for r in rows
-        }
 
     # ----------------------------------------------------------------- test
     def filter_maybe_seen(
@@ -232,8 +194,7 @@ class ShardedBloom:
         arrays["meta_keys"] = np.array([m[0] for m in meta], dtype=object)
         arrays["meta_mk"] = np.array([[m[1], m[2]] for m in meta], dtype=np.int64).reshape(-1, 2)
         # no allow_pickle kwarg: savez_compressed has none — passing it
-        # just stored a stray boolean array named "allow_pickle" in the
-        # archive (the cuckoo twin was fixed in r6; parity here)
+        # would store a stray boolean array named "allow_pickle"
         np.savez_compressed(buf, **arrays)
         tmp = path + ".tmp"
         with open(tmp, "wb") as f:
@@ -348,7 +309,8 @@ class BloomBroadcastChain:
             self._handles.append(self.spark.sparkContext.broadcast(payload))
 
     def append_hashes(self, deltas: dict[str, np.ndarray]) -> None:
-        """Broadcast one round's new-key hashes (from collect_hash_deltas)."""
+        """Broadcast one round's new-key hashes (per-shard int64 arrays, as
+        the engine collects them from its insert delta)."""
         if not deltas:
             return
         m, k = _params(self.expected_per_shard, self.fpp)

@@ -363,7 +363,7 @@ class ShardedCuckoo:
 
     def add_local(self, shard_key: str, hashes) -> None:
         f = self.shards.setdefault(shard_key, CuckooFilter(self.expected_per_shard))
-        fails = f.add_hashes(np.fromiter(hashes, dtype=np.int64))
+        fails = f.add_hashes(np.asarray(hashes, dtype=np.int64))
         if fails:
             raise RuntimeError(
                 f"cuckoo shard overflow ({fails} keys unplaced in "

@@ -1,16 +1,28 @@
 """The crawl round loop — ST1-ST9 (SURVEY.md §2.9) as rounds-as-batch-jobs.
 
-One round =
-  1. take the eligible PENDING working set (ALL known pending listing pages
-     + all pending offer/investment pages; rows under a Retry-After hold are
-     excluded until their round arrives),
-  2. politeness-governed fetch (mapInPandas, partitioned by domain_salt),
-  3. listings → link extraction → classify → canonicalize → Bloom+anti-join
-     dedupe (O1) → new PENDING frontier rows,
-  4. offers → parse cascade → refine (expressions) → offers/photos/quarantine
-     appends,
-  5. frontier DELTA appends (inserts + status updates), checkpoint, Bloom
-     shard-delta merge, metrics.
+One round takes the eligible PENDING working set (ALL known pending listing
+pages + all pending offer/investment pages; rows under a Retry-After hold
+wait for their round), runs the fused politeness-governed fetch + parse
+stage over it (mapInPandas, partitioned by domain_salt) and plans its three
+outputs: refined offers, new frontier rows (links → classify → canonicalize
+→ prefilter + exact anti-join, O1) and status updates. Then, in this order:
+
+  1. the staged-offers append, the insert delta and (single-JVM master) the
+     fetch summary are submitted together;
+  2. once the insert lands, the seen-store append and the insert-delta
+     collect (prefilter hashes + driver counters) run together;
+  3. the prefilter absorbs the new hashes and is saved;
+  4. the staged append is joined;
+  5. the status-update delta is appended — the round's COMMIT POINT;
+  6. working set, stop rules, metrics and checkpoint follow.
+
+The update delta, not ``checkpoint.json``, is the commit point because
+``resume()`` rebuilds the working set from the frontier's latest statuses:
+a page marked DONE is never fetched again. Appending it last means a crash
+anywhere earlier leaves the round's pages PENDING, so the resumed round
+re-fetches them and their offers land. Its rediscovered links are dropped
+by the exact anti-join, because the seen store and the saved prefilter
+already cover the round's inserts.
 
 Termination (ST2): per-source done when no pending pages remain (no_links),
 two consecutive listing pages yield no new offer URLs (no_new, A5 —
@@ -108,15 +120,14 @@ def is_single_jvm_master(master: str) -> bool:
 def _collect_insert_deltas(df: DataFrame):
     """ONE job over a round's insert delta returning BOTH driver products:
 
-    - per-(domain#salt) new-key hash arrays — the Bloom broadcast-chain
-      transport, packed to bytes executor-side (O(new URLs × 8 B) collected,
-      same wire format as ``ShardedBloom.collect_hash_deltas``);
+    - per-(domain#salt) new-key hash arrays, packed to bytes executor-side
+      (O(new URLs × 8 B) collected) — what the driver prefilter absorbs
+      (``add_local``) and the Bloom broadcast chain ships;
     - the (source, kind, page_idx, n) counter rows that feed the driver's
       metadata-scale progress tracking (``_track_new_agg``).
 
-    These used to be two jobs over the same tiny snapshot every round; the
-    grouped Arrow pack produces both in one pass (one extra group key per
-    (source, kind, page) combination within a shard — metadata-scale)."""
+    The grouped Arrow pack produces both in one pass (one extra group key
+    per (source, kind, page) combination within a shard — metadata-scale)."""
     import numpy as np
     import pandas as pd
 
@@ -207,10 +218,10 @@ class CrawlEngine:
         # opt-in instrumentation: a LongAccumulator counting fused-stage
         # partition computes (duplicate-compute probe; see fetch_parse)
         self.parse_computes_acc = None
-        # Widths scale with the session's parallelism by default (the r3
-        # scale finding: fixed constants capped the in-loop data plane at
-        # 4-8 tasks regardless of core count). Callers pin explicit values
-        # for toy-scale runs / reference-equivalence tests.
+        # Widths scale with the session's parallelism by default (fixed
+        # constants cap the in-loop data plane at a few tasks regardless of
+        # core count). Callers pin explicit values for toy-scale runs /
+        # reference-equivalence tests.
         dp = spark.sparkContext.defaultParallelism
         # salt KEYS ≈ 4× partitions: balls-into-bins at keys == partitions
         # leaves ~1/3 of partitions empty; politeness divides each domain's
@@ -230,8 +241,8 @@ class CrawlEngine:
         self.append_coalesce = (
             max(4, dp) if append_coalesce == "auto" else append_coalesce
         )
-        # domain → RobotsRules; when set, robots gating runs as a pure
-        # expression BEFORE any politeness budget is spent (crawl/politeness)
+        # domain → RobotsRules; when set, the fetch stage gates each row on
+        # them BEFORE any politeness budget is spent (crawl/fetch.py)
         self.robots_rules = robots_rules
         # ST8: Retry-After rows re-enter until this many attempts burn out
         self.max_transient_attempts = max_transient_attempts
@@ -353,16 +364,6 @@ class CrawlEngine:
         # feeds scripts/depth_bench.py's fixed-cost attribution; always on
         # (two time.monotonic() calls per phase, negligible)
         self.phase_times: dict[str, float] = defaultdict(float)
-        # one worker: the staged-offers append overlaps the frontier path
-        # within a round (Spark schedules concurrent jobs from separate
-        # driver threads); a single thread keeps t_staged appends ordered
-        self._staged_pool = ThreadPoolExecutor(
-            max_workers=1, thread_name_prefix="staged"
-        )
-        # rounds whose staged append has been submitted but not yet joined
-        # (offer-limit-less runs defer the join so the write overlaps the
-        # NEXT round's fetch): [(round_idx, batch_n, future, fetched_cache)]
-        self._staged_pending: list[tuple] = []
         # async pre-warm of the session's crawl-specific first-time costs,
         # overlapped with seed() / round 1 (both are latency-bound driver
         # sequences, so the executor pool is idle while they run)
@@ -385,19 +386,19 @@ class CrawlEngine:
         self._warmup_thread = t
 
     def _warmup(self) -> None:
-        """Best-effort pre-warm, measured against the r6 cold profile where
-        seed (6 s) + round 1 (8 s) were two-thirds of a 4-round crawl:
+        """Best-effort pre-warm of a cold session's first-time costs, where
+        seed + round 1 are the bulk of a short crawl:
 
         1. fork + import the python worker army (one ``mapInPandas`` task
            per core — round 1's fused fetch stage otherwise pays ~1 s/worker
            of fork+import latency on its first batch),
-        2. compile the staged write path by running a 1-row TWIN of the
-           ``_stage_offers`` plan (same fused-schema cached scan → refine
-           projection → partitionBy(is_valid) parquet write, so both the
-           fat refine codegen unit — the r6 event logs caught a 13 s Janino
-           compile on the first offer round — and the committer classes are
-           hot when real offers arrive; Janino caches by source text, and
-           ``ref_lit`` keeps the round literal out of the source).
+        2. compile the staged write path by writing a 1-row TWIN built by
+           ``_staged_plan`` — the helper ``_stage_offers`` uses — over a
+           fused-schema cached scan, so both the fat refine codegen unit (a
+           multi-second Janino compile on the first offer round) and the
+           committer classes are hot when real offers arrive; Janino caches
+           by source text, and ``ref_lit`` keeps the round literal out of
+           the source.
 
         Runs on a daemon thread, once per SparkSession; failures are
         swallowed (a missed warmup costs latency, never correctness) and no
@@ -429,27 +430,8 @@ class CrawlEngine:
 
             one = fetch_mod.fused_one_row(self.spark).cache()
             one.count()
-            parsed = one.filter(
-                (F.col("kind") == "offer")
-                & (F.col("fetch_status") == fetch_mod.FETCH_OK)
-            ).select(
-                "url", "url_canon", "source", "page_idx", "slot", "sub_slot",
-                *parse_mod.RAW_COL_NAMES,
-            )
-            if self.geocode_dim is not None:
-                dim = self.geocode_dim.select(
-                    F.col("city").alias("raw_city"),
-                    F.col("street").alias("raw_street"),
-                    "dim_lat",
-                    "dim_lon",
-                )
-                parsed = parsed.join(
-                    F.broadcast(dim), ["raw_city", "raw_street"], "left"
-                )
-            staged = (
-                refine_mod.refined(parsed)
-                .drop("dim_lat", "dim_lon")
-                .withColumn("round", ref_lit(0, "int"))
+            staged = self._staged_plan(
+                one.filter(F.col("row_kind") == "page"), 0
             )
             tmp = tempfile.mkdtemp(prefix="crawl_warmup_")
             try:
@@ -469,10 +451,9 @@ class CrawlEngine:
     @contextmanager
     def _phase(self, name: str):
         # tag every job submitted from this (thread, phase) with the phase
-        # name — thread-local, so the overlapped staging/insert/update
-        # threads each label their own jobs. Event logs / the UI then carry
-        # an exact job→phase map; the r5/r6 inverse-scaling attributions
-        # came from exactly this tagging (previously ad-hoc).
+        # name — thread-local, so the overlapped pool threads each label
+        # their own jobs. Event logs / the UI then carry an exact job→phase
+        # map (perfbench/evlog.py reduces a traced run by it).
         sc = self.spark.sparkContext
         prev = sc.getLocalProperty("spark.job.description")
         sc.setLocalProperty("spark.job.description", name)
@@ -661,8 +642,7 @@ class CrawlEngine:
         # appends are explicit repartitions, and skew is handled by domain
         # salting — so adaptive re-planning has nothing to decide here, but
         # it materializes every query stage as its OWN job with a driver
-        # re-plan between (the r7 event logs read 3-4 jobs per in-round
-        # write). Measured on the bench crawl: 18.1 → 15.8 s. Finalize keeps
+        # re-plan between (3-4 jobs per in-round write). Finalize keeps
         # AQE: its reconciliation windows/joins are the one in-engine place
         # where runtime re-planning (skew split, partition coalescing) can
         # matter at scale.
@@ -684,7 +664,6 @@ class CrawlEngine:
                     break
         finally:
             conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        stats["offers_parsed"] += self._drain_staged(block=True)
         with self._phase("run_finalize"):
             # the three finalize jobs touch DISJOINT tables (t_metrics /
             # t_frontier / curated-from-staged) — same overlap rationale as
@@ -741,14 +720,38 @@ class CrawlEngine:
         attempts+1 — the reference's 'retry only fetch_fail regions' loop
         (cli.py:731-816) at URL granularity. Robots-blocked rows carry
         STATUS_ROBOTS and 404s STATUS_MISSING — both terminal, never
-        re-enqueued (they can only re-fail / re-miss).
-        Written as an O(failed) update delta; returns the re-enqueued count.
+        re-enqueued (they can only re-fail / re-miss). Failed sources get
+        another chance at their stop state. Returns the re-enqueued count.
         """
+        n = self._requeue(
+            F.col("status") == STATUS_FAILED,
+            "retry_reset",
+            keep_stops=("no_new", "offer_limit"),
+        )
+        if n:
+            self._had_fetch_fail.clear()
+        return n
+
+    def refresh_offers(self) -> int:
+        """Re-enqueue DONE offer pages for a refresh pass (the reference's
+        repeated `detail` runs over an existing urls.csv re-parse every URL;
+        first_seen/last_seen split on the merge, detail.py:83,89-90).
+        attempts bumps so flaky pages don't re-fail."""
+        return self._requeue(
+            (F.col("status") == STATUS_DONE) & (F.col("kind") == "offer"),
+            "refresh_reset",
+            keep_stops=("offer_limit",),
+        )
+
+    def _requeue(self, which, stage: str, keep_stops: tuple) -> int:
+        """Re-enqueue the frontier rows matching ``which`` as PENDING with
+        attempts+1, written as an O(requeued) update delta tagged ``stage``;
+        stop reasons outside ``keep_stops`` are lifted. Returns the count."""
         fr = self.frontier()
         if fr is None:
             return 0
         reset = (
-            fr.filter(F.col("status") == STATUS_FAILED)
+            fr.filter(which)
             .withColumn("attempts", F.col("attempts") + 1)
             .withColumn("status", F.lit(STATUS_PENDING))
             .withColumn("round", F.lit(self.round_idx))
@@ -757,23 +760,25 @@ class CrawlEngine:
         n, path = self.t_frontier.append_with_path(
             self._coalesced(reset.select(*FRONTIER_COLS)),
             round_idx=self.round_idx,
-            stage="retry_reset",
+            stage=stage,
         )
         if n == 0:
             return 0
         requeued = self.spark.read.parquet(path)
-        self._track_new_agg(self._new_rows_agg(requeued))
+        self._track_new_agg(
+            requeued.groupBy("source", "kind", "page_idx")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
         self._pending = (
             requeued
             if self._pending is None
             else self._pending.unionByName(requeued)
         ).localCheckpoint()
-        # failed sources get another chance at their stop state
         self._stopped = {
-            k: v for k, v in self._stopped.items() if v in ("no_new", "offer_limit")
+            k: v for k, v in self._stopped.items() if v in keep_stops
         }
         self._no_new_streak.clear()
-        self._had_fetch_fail.clear()
         return n
 
     def evict_seen(self, ttl_rounds: int) -> int:
@@ -876,43 +881,6 @@ class CrawlEngine:
         }
         return n
 
-    def refresh_offers(self) -> int:
-        """Re-enqueue DONE offer pages for a refresh pass (the reference's
-        repeated `detail` runs over an existing urls.csv re-parse every URL;
-        first_seen/last_seen split on the merge, detail.py:83,89-90).
-        attempts bumps so flaky pages don't re-fail. O(done-offers) delta."""
-        fr = self.frontier()
-        if fr is None:
-            return 0
-        reset = (
-            fr.filter(
-                (F.col("status") == STATUS_DONE) & (F.col("kind") == "offer")
-            )
-            .withColumn("attempts", F.col("attempts") + 1)
-            .withColumn("status", F.lit(STATUS_PENDING))
-            .withColumn("round", F.lit(self.round_idx))
-            .withColumn("retry_at", F.lit(None).cast("double"))
-        )
-        n, path = self.t_frontier.append_with_path(
-            self._coalesced(reset.select(*FRONTIER_COLS)),
-            round_idx=self.round_idx,
-            stage="refresh_reset",
-        )
-        if n == 0:
-            return 0
-        requeued = self.spark.read.parquet(path)
-        self._track_new_agg(self._new_rows_agg(requeued))
-        self._pending = (
-            requeued
-            if self._pending is None
-            else self._pending.unionByName(requeued)
-        ).localCheckpoint()
-        self._stopped = {
-            k: v for k, v in self._stopped.items() if v == "offer_limit"
-        }
-        self._no_new_streak.clear()
-        return n
-
     def _coalesced(self, df: DataFrame) -> DataFrame:
         """Bound the file count of small per-round appends WITHOUT collapsing
         the compute stage above the write: ``coalesce`` propagates upstream
@@ -938,7 +906,8 @@ class CrawlEngine:
         t_start = time.monotonic()
         self.round_idx += 1
         if self._pending is None or self._eligible_pending_total() == 0:
-            return False, 0, self._finalize_done()
+            self._finalize_done()
+            return False, 0, 0
 
         # Eligibility is a pure filter over the cached working set: ALL known
         # pending listing pages drain together (rounds ≪ O(frontier); order
@@ -957,21 +926,14 @@ class CrawlEngine:
         batch = self._pending.filter(eligible)
         leftover = self._pending.filter(~eligible)
 
-        # robots gating runs INSIDE the fetch stage over the once-per-engine
-        # broadcast rules (zero extra plan stages; blocked rows surface as
-        # FETCH_ROBOTS and spend no budget). politeness.apply_robots remains
-        # the standalone declarative gate (expression / Arrow UDF by rule
-        # count) for pipelines that want the column.
         if self.real_sleep and self._wall_t0 is None:
             self._wall_t0 = time.time()
         with self._phase("fetch_plan"):
-            # FUSED fetch+parse (fetch.make_fetch_parse_stage): the page
-            # html is built, link-extracted and field-parsed inside ONE
-            # python pass and never crosses the stage boundary — the round
-            # caches only structured rows (page bookkeeping + links + raw
-            # offer fields), not a multi-GB html corpus. This was the
-            # measured in-loop scale limiter after the write widths were
-            # parallelism-derived.
+            # FUSED fetch+parse (fetch.make_fetch_parse_stage): robots gate,
+            # politeness, link extraction and field parse in ONE python
+            # pass; the page html never crosses the stage boundary, so the
+            # round caches only structured rows (page bookkeeping + links +
+            # raw offer fields), not the page corpus.
             fetched = fetch_mod.fetch_parse(
                 batch, self.page_store_bc, self.n_salts,
                 real_sleep=self.real_sleep,
@@ -984,36 +946,22 @@ class CrawlEngine:
             ).cache()
             pages = fetched.filter(F.col("row_kind") == "page")
 
-        # ---- offers → parse → refine → ONE staged append (raw zone);
-        #      curated tables are views finalized once per run. On a
-        #      single-JVM master this is submitted FIRST — before any action
-        #      has materialized the fetched cache: every consumer below
-        #      (staged / summary / insert / update) races over the same
-        #      cache, and the BlockManager's per-block get-or-compute locks
-        #      make the fused stage compute exactly once while the racers'
-        #      downstream stages overlap. The r6 serialized form paid the
-        #      summary action's full latency BEFORE submitting any output
-        #      job — ~1 s/round of core-invariant wall at depth-bench load.
-        #
-        #      On a MULTI-EXECUTOR master that race is unsound: the
-        #      get-or-compute lock is per-JVM, so racing jobs compute the
-        #      same uncached partition on different executors and the fused
-        #      python parse runs up to min(racers, executors) times
-        #      (measured on local-cluster — see BENCH/BASELINE.md multi-JVM
-        #      section). There the summary scan — one narrow full pass —
-        #      materializes the cache FIRST, then the output jobs fan out
-        #      over warm blocks (remote block fetch, never recompute).
-        #      (Negative result, measured at the 8192-card 4×4-executor
-        #      cell: using the STAGED WRITE as the materializer instead —
-        #      hoping its write would pipeline with the compute — reads
-        #      2,088 vs 2,362 pages/s same-session: the staged job's pre-write exchange
-        #      is a stage barrier, so nothing pipelines and the other three
-        #      consumers just wait behind the write too.)
+        # On a single-JVM master the first consumers below (staged /
+        # insert / summary) race over the uncached fetch: the BlockManager's
+        # per-block get-or-compute lock makes the fused stage compute exactly
+        # once while the consumers' downstream stages overlap. On a
+        # MULTI-EXECUTOR master that lock is per-JVM, so racing jobs would
+        # compute the same partition on different executors and run the
+        # python parse up to min(racers, executors) times (BENCH/BASELINE.md
+        # multi-JVM section); there the summary scan — one narrow full
+        # pass — materializes the cache FIRST and the outputs fan out over
+        # warm blocks. (The staged write is no substitute materializer: its
+        # pre-write exchange is a stage barrier, so the other consumers
+        # would wait behind the whole write.)
         summary = None
         if not self._single_jvm:
             with self._phase("fetch_summary"):
                 summary = self._collect_fetch_summary(pages)
-        staged_fut = self._staged_pool.submit(self._stage_offers, pages)
 
         # ---- link rows (already extracted inside the fused stage) → new
         #      frontier candidates; url/slot/kind on a link row are the
@@ -1060,18 +1008,12 @@ class CrawlEngine:
             )
             links = links.unionByName(look)
         with self._phase("links_plan"):
-            # Single-shuffle, SINGLE-BRANCH insert path: classify exprs →
+            # Single-shuffle, single-branch insert path: classify exprs →
             # ONE exchange on url_canon aligned to the seen store's bucket
             # count → dedup agg (SO5) → one conditional LeftAnti against
             # the bucketed seen scan (prefilter verdict as a join-condition
             # conjunct; shuffle-hash, so the seen side is neither sorted
             # nor broadcast) → direct write at the join's partitioning.
-            # History: the r4 path paid three candidate shuffles per round
-            # (window sort, anti-join re-shuffle, append repartition); its
-            # replacement's fresh/maybe split + union then made Catalyst
-            # run the whole candidate pipeline TWICE per round — the r5
-            # depth probe measured that duplication as the largest
-            # core-invariant slice of the loop. Both are gone.
             candidates = frontier_mod.classify_and_key_links(
                 links, self.n_salts,
                 dedup_partitions=self.seen_store.n_buckets,
@@ -1080,179 +1022,95 @@ class CrawlEngine:
             fresh = frontier_mod.anti_join_seen(
                 candidates, self._seen(), self._prefilter()
             )
-
-        # ---- ACTION 2: insert delta (O(new rows)) + update delta (status
-        # transitions for this round's batch). The two appends touch
-        # DISJOINT keys — a URL discovered this round is never fetched this
-        # round (its fetch happens a later round), and every fetched URL is
-        # already seen so the anti-join excludes it from inserts — so they
-        # run as CONCURRENT jobs; the manifest commit is lock-serialized in
-        # ParquetTable and each append reads back its OWN snapshot path.
         new_rows = frontier_mod.finish_new_rows(fresh, self.round_idx)
         with self._phase("updates_plan"):
             updates = self._status_updates(pages)
 
-        def _ins() -> tuple[int, str]:
-            with self._phase("insert_append"):
-                return self.t_frontier.append_with_path(
+        # ---- steps 1-4 (module docstring): everything but the commit.
+        delta: dict = {}
+        agg: list = []
+        try:
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                staged_fut = pool.submit(self._stage_offers, pages)
+                ins_fut = pool.submit(
+                    self._tagged, "insert_append",
+                    self.t_frontier.append_with_path,
                     new_rows.select(*FRONTIER_COLS),
                     round_idx=self.round_idx,
                     stage="insert",
                 )
+                sum_fut = (
+                    pool.submit(
+                        self._tagged, "fetch_summary",
+                        self._collect_fetch_summary, pages,
+                    )
+                    if summary is None
+                    else None
+                )
+                ins_n, ins_path = ins_fut.result()
+                # explicit schema: the snapshot was written from
+                # FRONTIER_COLS this round — inferring it back would re-read
+                # footers per round
+                new_df = (
+                    self.spark.read.schema(FRONTIER_SCHEMA).parquet(ins_path)
+                    if ins_n
+                    else None
+                )
+                if new_df is not None:
+                    seen_fut = pool.submit(
+                        self._tagged, "seen_append",
+                        self.seen_store.append, new_df,
+                    )
+                    with self._phase("insert_deltas"):
+                        delta, agg = _collect_insert_deltas(new_df)
+                    seen_fut.result()
+                if sum_fut is not None:
+                    summary = sum_fut.result()
+                for shard_key, arr in delta.items():
+                    self.bloom.add_local(shard_key, arr)
+                if self._bloom_chain is not None:
+                    self._bloom_chain.append_hashes(delta)
+                self.bloom.save(self.bloom_path)
+                with self._phase("staged_join"):
+                    offers_n = staged_fut.result()
 
-        def _upd() -> tuple[int, str]:
-            # written straight off the fetched cache's partitions — a
-            # narrow zero-shuffle job (run-end compaction bounds files)
+            # ---- step 5, the COMMIT POINT: this round's pages leave
+            # PENDING. Written straight off the fetched cache's partitions —
+            # a narrow zero-shuffle job (run-end compaction bounds files).
             with self._phase("update_append"):
-                return self.t_frontier.append_with_path(
+                upd_n, upd_path = self.t_frontier.append_with_path(
                     updates.select(*FRONTIER_COLS),
                     round_idx=self.round_idx,
                     stage="update",
                 )
+        finally:
+            # the update job is the cache's last reader
+            fetched.unpersist()
+        self._offers_total += offers_n
 
-        def _seen() -> None:
-            # seen-store append: O(new URLs), bucketed (url_canon only)
-            with self._phase("seen_append"):
-                self.seen_store.append(new_df)
-
-        def _deltas():
-            # Bloom path: ONE job returns BOTH driver-side products of the
-            # insert delta — the per-shard new-key hashes (chain transport,
-            # O(new URLs × 8 B)) and the (source, kind, page_idx, n)
-            # counters. These were two separate jobs over the same tiny
-            # snapshot; merging them removes one job submission per round.
-            with self._phase("insert_deltas"):
-                return _collect_insert_deltas(new_df)
-
-        def _bloom():
-            # Cuckoo path: bitmap-table delta, OR-merged driver-side and
-            # re-broadcast in full next round (deletable ⇒ not chainable).
-            with self._phase("bloom_build"):
-                return self._pf_cls.build(
-                    new_df,
-                    expected_per_shard=self.bloom.expected_per_shard,
-                    fpp=self.bloom_fpp,
-                )
-
-        def _agg():
-            with self._phase("new_rows_agg"):
-                return self._new_rows_agg(new_df)
-
-        # ---- all five round-output jobs overlap: insert ∥ update first,
-        # then (seen table ∥ Bloom bitmaps ∥ driver counters) over the
-        # insert delta while the update may still be writing. ~3-5 s/round
-        # of serialized small-job latency at depth-bench load becomes the
-        # max() of the chains.
-        new_n = 0
-        new_offer_counts: dict[str, int] = defaultdict(int)
-        with ThreadPoolExecutor(max_workers=6) as pool:
-            ins_fut = pool.submit(_ins)
-            upd_fut = pool.submit(_upd)
-
-            # ---- ACTION: fetch summary (batch size, lineage counters,
-            #      status mix, per-page yield accounting, politeness
-            #      high-water marks) in one aggregation — on a single-JVM
-            #      master submitted to the POOL so the main thread is free
-            #      to dispatch the post-insert consumers the moment the
-            #      insert delta lands (collecting it inline here serialized
-            #      the seen/deltas submissions behind the summary's full
-            #      cache-materialization wait); on a multi-executor master
-            #      it already ran above as the cache materializer.
-            sum_fut = (
-                pool.submit(
-                    self._tagged, "fetch_summary",
-                    self._collect_fetch_summary, pages,
-                )
-                if summary is None
-                else None
-            )
-
-            ins_n, ins_path = ins_fut.result()
-            # explicit schema: the snapshot was written from FRONTIER_COLS
-            # this round — inferring it back would re-read footers per round
-            new_df = (
-                self.spark.read.schema(FRONTIER_SCHEMA).parquet(ins_path)
-                if ins_n
-                else None
-            )
-            seen_fut = deltas_fut = bloom_fut = agg_fut = None
-            if new_df is not None:
-                seen_fut = pool.submit(_seen)
-                if self._bloom_chain is not None:
-                    deltas_fut = pool.submit(_deltas)
-                else:
-                    bloom_fut = pool.submit(_bloom)
-                    agg_fut = pool.submit(_agg)
-
-            if sum_fut is not None:
-                summary = sum_fut.result()
-            batch_n = sum(r["n"] for r in summary)
-            # advance the cross-round politeness clock (ST7); rows that
-            # spent no budget (robots/missing) record -1 and are ignored
-            for r in summary:
-                if r["max_at"] is not None and r["max_at"] >= 0:
-                    k = r["domain_salt"]
-                    if r["max_at"] > self._salt_clock.get(k, -1.0):
-                        self._salt_clock[k] = r["max_at"]
-            self._sources.update(r["source"] for r in summary)
-            self._track_fetched(summary)
-            # listing pages whose fetch RESOLVED this round (not
-            # re-enqueued) — the per-source page count feeding A5
-            listing_pages_fetched: dict[str, set[int]] = defaultdict(set)
-            for r in summary:
-                if (
-                    r["kind"] == "listing"
-                    and not self._is_requeue(r)
-                    # MISSING = beyond-end-of-pagination (404 past the
-                    # last page): no content was observed, so it neither
-                    # feeds the A5 no-new streak nor counts as content
-                    and r["fetch_status"] != fetch_mod.FETCH_MISSING
-                ):
-                    listing_pages_fetched[r["source"]].add(r["page_key"])
-
-            if new_df is not None:
-                seen_fut.result()
-                if deltas_fut is not None:
-                    delta, agg = deltas_fut.result()
-                    for shard_key, arr in delta.items():
-                        self.bloom.add_local(shard_key, arr)
-                    self._bloom_chain.append_hashes(delta)
-                else:
-                    self.bloom.merge(bloom_fut.result())
-                    agg = agg_fut.result()
-                self._track_new_agg(agg)
-                for r in agg:
-                    new_n += r["n"]
-                    if r["kind"] != "listing":  # offers + investments
-                        new_offer_counts[r["source"]] += r["n"]
-            upd_n, upd_path = upd_fut.result()
-
-        # ---- join the overlapped staging job (see submit above). With an
-        # offer limit the count gates the next round, so join NOW; without
-        # one the join is DEFERRED: the staged write's tail then overlaps
-        # the next round's fetch/plan driver latency instead of serializing
-        # at the end of this round (~0.3-1.2 s/run at bench load), and the
-        # single staging worker keeps appends ordered regardless.
-        if self.offer_limit is None:
-            # the fetched cache rides along: the deferred staged job may
-            # still be scanning it, so its unpersist waits for the join
-            # (an early unpersist would silently recompute the fused
-            # python stage for evicted partitions)
-            self._staged_pending.append(
-                (self.round_idx, batch_n, staged_fut, fetched)
-            )
-            offers_n = self._drain_staged(block=False)
-        else:
-            with self._phase("staged_join"):
-                offers_n = staged_fut.result()
-            self._offers_total += offers_n
-
+        batch_n = sum(r["n"] for r in summary)
         # defensive backstop: an empty batch normally never reaches here
         # (the round-start eligible-counter check returns first), but if it
-        # does, every output job above was a joined no-op (0-row appends)
+        # does, every output job above was a no-op (0-row appends)
         if batch_n == 0:
-            fetched.unpersist()
-            return False, 0, self._finalize_done()
+            self._finalize_done()
+            return False, 0, offers_n
+
+        # advance the cross-round politeness clock (ST7); rows that spent no
+        # budget (robots/missing) record -1 and are ignored
+        for r in summary:
+            if r["max_at"] is not None and r["max_at"] >= 0:
+                k = r["domain_salt"]
+                if r["max_at"] > self._salt_clock.get(k, -1.0):
+                    self._salt_clock[k] = r["max_at"]
+        self._sources.update(r["source"] for r in summary)
+        self._track_fetched(summary)
+        self._track_new_agg(agg)
+        new_n = sum(r["n"] for r in agg)
+        new_offer_counts: dict[str, int] = defaultdict(int)
+        for r in agg:
+            if r["kind"] != "listing":  # offers + investments
+                new_offer_counts[r["source"]] += r["n"]
 
         # ---- next working set: O(batch) unions whose roots are all ON DISK
         # (previous checkpoint + this round's delta parquet), so the lazy
@@ -1262,7 +1120,7 @@ class CrawlEngine:
         # only ST8 transient rows re-enter PENDING via the update delta;
         # when the round had none (the common case), skip the read-back —
         # it would add a dead parquet scan to the working-set plan per round
-        requeue_n = sum(r["n"] for r in summary if self._is_requeue(r))
+        requeue_n = sum(r["n"] for r in summary if r["requeue"])
         if upd_n and requeue_n:
             requeues = (
                 self.spark.read.schema(FRONTIER_SCHEMA)
@@ -1284,14 +1142,23 @@ class CrawlEngine:
                 pass
         else:
             self._pending = nxt.select(*FRONTIER_COLS)
-        self.bloom.save(self.bloom_path)
 
         # ---- stop rules (A5 no-new streak): a source with k listing pages
         # resolved this round and zero new yield advances its streak by k
-        # (identical to the reference's per-page rule at one page per round)
-        for src, pages in listing_pages_fetched.items():
+        # (identical to the reference's per-page rule at one page per round).
+        # MISSING listings are beyond-end-of-pagination (404 past the last
+        # page): no content was observed, so they never feed the streak.
+        listing_pages_fetched: dict[str, set[int]] = defaultdict(set)
+        for r in summary:
+            if (
+                r["kind"] == "listing"
+                and not r["requeue"]
+                and r["fetch_status"] != fetch_mod.FETCH_MISSING
+            ):
+                listing_pages_fetched[r["source"]].add(r["page_key"])
+        for src, pages_done in listing_pages_fetched.items():
             if new_offer_counts.get(src, 0) == 0:
-                streak = self._no_new_streak.get(src, 0) + len(pages)
+                streak = self._no_new_streak.get(src, 0) + len(pages_done)
                 self._no_new_streak[src] = streak
                 if streak >= self.no_new_stop:
                     self._stopped[src] = "no_new"
@@ -1315,67 +1182,63 @@ class CrawlEngine:
             ]
             + [
                 (self.round_idx, "discover", -1, None, batch_n, new_n, 0, wall_ms),
+                (self.round_idx, "offers", -1, None, batch_n, offers_n, 0, wall_ms),
             ]
-            + (
-                # deferred-join rounds emit their offers row at drain time
-                []
-                if self.offer_limit is None
-                else [
-                    (self.round_idx, "offers", -1, None, batch_n, offers_n, 0, wall_ms)
-                ]
-            )
         )
 
         # checkpoint from driver-tracked progress — no read-back aggregation
         self._write_checkpoint()
-        if self.offer_limit is not None:
-            # deferred-join rounds unpersist at drain time instead
-            fetched.unpersist()
         return True, batch_n, offers_n
 
+    def _staged_plan(self, pages: DataFrame, round_idx: int) -> DataFrame:
+        """Fetched page rows → the staged (refined) offer rows of one round:
+        OK offer pages' raw fields (parsed inside the fused stage) →
+        optional OSM memo join → refine projection, stamped with the round.
+        ``_warmup`` compiles its twin through this same helper."""
+        parsed = pages.filter(
+            (F.col("kind") == "offer")
+            & (F.col("fetch_status") == fetch_mod.FETCH_OK)
+        ).select(
+            "url", "url_canon", "source", "page_idx", "slot", "sub_slot",
+            *parse_mod.RAW_COL_NAMES,
+        )
+        if self.geocode_dim is not None:
+            # broadcast streetwise memo join keyed on the PAGE's own address
+            # fields — the same (street, city) query string the reference
+            # sends to Nominatim (morizon.py:430-436)
+            dim = self.geocode_dim.select(
+                F.col("city").alias("raw_city"),
+                F.col("street").alias("raw_street"),
+                "dim_lat",
+                "dim_lon",
+            )
+            parsed = parsed.join(
+                F.broadcast(dim), ["raw_city", "raw_street"], "left"
+            )
+        return (
+            refine_mod.refined(parsed)
+            .drop("dim_lat", "dim_lon")
+            # ref_lit: this projection (the full refine expression map — the
+            # largest codegen unit in the loop) is rebuilt every round; an
+            # inlined round literal would force a multi-second Janino
+            # recompile per round (functions/codegen.py)
+            .withColumn("round", ref_lit(round_idx, "int"))
+        )
+
     def _stage_offers(self, pages: DataFrame) -> int:
-        """Parsed offer rows (raw fields came out of the fused fetch+parse
-        stage) → refine → one staged append; returns the round's
-        valid-offer count (parquet footers, no extra job). Runs on the
-        staging thread — touches only t_staged and the fetched cache."""
+        """One round's staged append (raw zone, partitioned by validity);
+        returns its valid-offer count from parquet footers, no extra job.
+        Runs on a pool thread — touches only t_staged and the fetched
+        cache."""
         with self._phase("staged_plan"):
-            parsed = pages.filter(
-                (F.col("kind") == "offer")
-                & (F.col("fetch_status") == fetch_mod.FETCH_OK)
-            ).select(
-                "url", "url_canon", "source", "page_idx", "slot", "sub_slot",
-                *parse_mod.RAW_COL_NAMES,
-            )
-            if self.geocode_dim is not None:
-                # broadcast streetwise memo join keyed on the PAGE's own
-                # address fields — the same (street, city) query string the
-                # reference sends to Nominatim (morizon.py:430-436)
-                dim = self.geocode_dim.select(
-                    F.col("city").alias("raw_city"),
-                    F.col("street").alias("raw_street"),
-                    "dim_lat",
-                    "dim_lon",
-                )
-                parsed = parsed.join(
-                    F.broadcast(dim), ["raw_city", "raw_street"], "left"
-                )
-            staged = (
-                refine_mod.refined(parsed)
-                .drop("dim_lat", "dim_lon")
-                # ref_lit: this projection (the full refine expression map —
-                # the largest codegen unit in the loop) is rebuilt every
-                # round; an inlined round literal would force a multi-second
-                # Janino recompile per round (functions/codegen.py)
-                .withColumn("round", ref_lit(self.round_idx, "int"))
-            )
+            staged = self._staged_plan(pages, self.round_idx)
         with self._phase("staged_append"):
-            self.t_staged.append(
+            _, snap_path = self.t_staged.append_with_path(
                 self._coalesced(staged),
                 round_idx=self.round_idx,
                 stage="staged",
                 partition_by=["is_valid"],
             )
-        snap_path = self.t_staged.lineage()[-1]["path"]
         return _rows_under(os.path.join(snap_path, "is_valid=true"))
 
     # ------------------------------------------------- round-loop helpers
@@ -1409,12 +1272,6 @@ class CrawlEngine:
         if not paths:
             return None
         return self.spark.read.parquet(*paths).select("url_canon")
-
-    def _is_requeue(self, r) -> bool:
-        """Does this summary row re-enter PENDING under ST8? (The verdict is
-        computed IN the summary aggregation — the collect never carries the
-        raw attempts dimension.)"""
-        return bool(r["requeue"])
 
     def _collect_fetch_summary(self, pages: DataFrame) -> list:
         """One aggregation over the round's page rows → the driver's
@@ -1491,53 +1348,14 @@ class CrawlEngine:
             .alias("attempts"),
         )
 
-    @staticmethod
-    def _new_rows_agg(df: DataFrame):
-        """(source, kind, page_idx, n) — the metadata-scale aggregate that
-        feeds driver counters in place of collecting rows."""
-        return (
-            df.groupBy("source", "kind", "page_idx")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-
-    def _drain_staged(self, block: bool) -> int:
-        """Join deferred staged-append futures (completed ones, or ALL when
-        ``block``): fold their valid-offer counts into the run totals and
-        emit the per-round offers metric rows the inline path would have
-        written (wall_ms 0.0 — the owning round's wall closed before the
-        deferred join resolved). Returns the newly-resolved offer count."""
-        resolved = 0
-        still_pending = []
-        for rnd, bn, fut, cached in self._staged_pending:
-            if block or fut.done():
-                with self._phase("staged_join"):
-                    n = fut.result()
-                if cached is not None:
-                    try:
-                        cached.unpersist()
-                    except Exception:
-                        pass
-                self._offers_total += n
-                self._metrics_buf.append(
-                    (rnd, "offers", -1, None, bn, n, 0, 0.0)
-                )
-                resolved += n
-            else:
-                still_pending.append((rnd, bn, fut, cached))
-        self._staged_pending = still_pending
-        return resolved
-
     # ------------------------------------------------------------ teardown
-    def _finalize_done(self) -> int:
-        drained = self._drain_staged(block=True)
+    def _finalize_done(self) -> None:
         for src in sorted(self._sources):
             if self._had_fetch_fail.get(src):
                 continue  # retryable — stays not-done with fetch_fail (ST5)
             self._stopped.setdefault(src, "no_links")
         self._write_checkpoint()
         self._flush_metrics()
-        return drained
 
     def _track_new_agg(self, agg_rows) -> None:
         for r in agg_rows:
@@ -1555,7 +1373,7 @@ class CrawlEngine:
     def _track_fetched(self, summary) -> None:
         for r in summary:
             src = r["source"]
-            if self._is_requeue(r):
+            if r["requeue"]:
                 continue  # stays pending under a Retry-After hold (ST8)
             if r["kind"] == "listing":
                 self._pending_listing_pages.get(src, set()).discard(r["page_key"])
@@ -1595,24 +1413,15 @@ class CrawlEngine:
             if reason is None and drained and self._had_fetch_fail.get(src):
                 # drained only because pages failed → retryable, not done
                 # (ST5: fetch_fail regions stay not-done and re-enter)
-                state[src] = {
-                    "region": src,
-                    "done": False,
-                    "last_page_done": int(self._last_page_done.get(src, 0)),
-                    "stop_reason": "fetch_fail",
-                    "processed_offers_last_run": int(self._offers_total),
-                    "round": self.round_idx,
-                    "bloom_snapshot": self.bloom_path
-                    if os.path.exists(self.bloom_path)
-                    else None,
-                }
-                continue
-            done = reason is not None or drained
+                done, reason = False, "fetch_fail"
+            else:
+                done = reason is not None or drained
+                reason = reason or ("no_links" if done else None)
             state[src] = {
                 "region": src,
                 "done": done,
                 "last_page_done": int(self._last_page_done.get(src, 0)),
-                "stop_reason": reason if reason else ("no_links" if done else None),
+                "stop_reason": reason,
                 "processed_offers_last_run": int(self._offers_total),
                 "round": self.round_idx,
                 "bloom_snapshot": self.bloom_path

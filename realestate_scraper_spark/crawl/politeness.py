@@ -6,9 +6,9 @@ robots handling at all. The engine upgrades this to the north_rule shape:
 
 - **robots.txt rules**: parsed per domain into (allow, prefix) rules with
   longest-prefix-match semantics (the de-facto standard), plus an optional
-  ``Crawl-delay``. Rules are tiny → broadcast; the allow decision is a pure
-  Spark expression built from the broadcast rule list (JVM-side, codegen) —
-  no UDF, no shuffle.
+  ``Crawl-delay``. Rules are tiny → broadcast once per engine; the fetch
+  stage (crawl/fetch.py) evaluates ``RobotsRules.allows`` per row before it
+  spends any politeness budget — no extra plan stage, no shuffle.
 - **crawl-delay token buckets**: per-domain virtual-time buckets enforced
   inside the fetch stage (crawl/fetch.py). The frontier is partitioned by
   ``domain_salt``; a domain's configured delay is multiplied by its shard
@@ -22,11 +22,6 @@ check holds identical between the reference simulator and the engine.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-
-import pandas as pd
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 
 @dataclass
@@ -76,102 +71,3 @@ def parse_robots_txt(domain: str, text: str) -> RobotsRules:
             except ValueError:
                 pass
     return rules
-
-
-def robots_allow_expr(
-    rules_by_domain: dict[str, RobotsRules], domain: Column, path: Column
-) -> Column:
-    """Allow/deny as a pure expression over broadcast-small rule lists.
-
-    Longest-prefix-match compiled to a when-chain ordered by prefix length
-    (rule sets are tiny per domain — the expression stays small; at huge rule
-    counts this would switch to a broadcast join against a prefix table).
-    """
-    expr = F.lit(True)
-    for dom, rules in rules_by_domain.items():
-        ordered = sorted(
-            [(p, False) for p in rules.disallow] + [(p, True) for p in rules.allow],
-            key=lambda t: len(t[0]),
-        )
-        dom_expr = F.lit(True)  # default allow; longer matches override
-        for prefix, allow in ordered:
-            dom_expr = F.when(
-                path.startswith(prefix), F.lit(allow)
-            ).otherwise(dom_expr)
-        expr = F.when(domain == dom, dom_expr).otherwise(expr)
-    return expr
-
-
-# Above this many total rules the when-chain expression becomes a codegen
-# liability (compiled into EVERY plan that touches the gate — measured 42 s
-# of a 70 s crawl at 141 rules); switch to the broadcast Arrow UDF.
-N_EXPR_RULES_MAX = 64
-
-
-def robots_allow_udf(rules_by_domain: dict[str, RobotsRules], spark):
-    """Longest-prefix-match as a VECTORIZED pandas UDF over broadcast rules.
-
-    Per Arrow batch and per domain group: start allow=True, apply rules in
-    ascending (prefix_len, allow) order with `str.startswith` masks — longer
-    matches overwrite shorter, Allow wins length ties (the reference's `>=`,
-    RobotsRules.allows). O(rules) vectorized ops per batch, zero codegen."""
-    payload = {
-        dom: sorted(
-            [(p, False) for p in r.disallow] + [(p, True) for p in r.allow],
-            key=lambda t: (len(t[0]), t[1]),
-        )
-        for dom, r in rules_by_domain.items()
-    }
-    bc = spark.sparkContext.broadcast(payload)
-
-    @F.pandas_udf("boolean")
-    def _allow(domain: pd.Series, path: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = np.ones(len(domain), dtype=bool)
-        for dom in domain.unique():
-            rules = bc.value.get(dom)
-            if not rules:
-                continue
-            dmask = (domain == dom).to_numpy()
-            dpaths = path[dmask]
-            dout = np.ones(dmask.sum(), dtype=bool)
-            for prefix, allow in rules:
-                m = dpaths.str.startswith(prefix).to_numpy()
-                dout[m] = allow
-            out[dmask] = dout
-        return pd.Series(out)
-
-    return _allow
-
-
-def apply_robots(
-    frontier: DataFrame, rules_by_domain: dict[str, RobotsRules]
-) -> DataFrame:
-    """Attach ``robots_allowed`` to frontier rows (P-gate before fetch).
-
-    Small rule sets compile to a pure expression (JVM, codegen); large ones
-    go through the broadcast Arrow UDF — same longest-prefix semantics,
-    asserted equal in tests."""
-    path = F.regexp_replace(
-        F.col("url_canon"), r"^https?://[^/]+", ""
-    )
-    # canonical root URLs have no path left → "/" (same convention as the
-    # in-stage gate in crawl/fetch.py, so the two paths can't diverge)
-    path = F.when(path == F.lit(""), F.lit("/")).otherwise(path)
-    n_rules = sum(
-        len(r.disallow) + len(r.allow) for r in rules_by_domain.values()
-    )
-    if n_rules <= N_EXPR_RULES_MAX:
-        gate = robots_allow_expr(rules_by_domain, F.col("domain"), path)
-    else:
-        gate = robots_allow_udf(rules_by_domain, frontier.sparkSession)(
-            F.col("domain"), path
-        )
-    return frontier.withColumn("robots_allowed", gate)
-
-
-def url_path(url: str) -> str:
-    from urllib.parse import urlsplit
-
-    return urlsplit(url).path or "/"

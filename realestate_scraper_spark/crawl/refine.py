@@ -23,8 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from realestate_scraper_spark.schemas import OFFER_COLUMNS
-
 # morizon.py:23 bbox (the engine standardizes on the morizon constants; the
 # gratka variant 48.5..55.5 is strictly looser, so this is the tight gate).
 PL_BBOX = {"lat_min": 49.0, "lat_max": 54.9, "lon_min": 14.0, "lon_max": 24.5}
@@ -257,16 +255,6 @@ def refined(parsed: DataFrame) -> DataFrame:
         if c not in parsed.columns:
             parsed = parsed.withColumn(c, F.lit(None).cast("double"))
     return parsed.withColumns(_refined_col_map())
-
-
-def refine_offers(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """parsed raw fields → (valid offers 11-col, quarantine with reason)."""
-    r = refined(parsed)
-    valid = r.filter(F.col("is_valid")).select(*OFFER_COLUMNS)
-    quarantine = r.filter(~F.col("is_valid")).select(
-        "url", "source", "page_idx", "slot", F.col("reject_reason")
-    )
-    return valid, quarantine
 
 
 def explode_photos(parsed: DataFrame, per_offer_limit: int | None = None) -> DataFrame:

@@ -5,11 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from realestate_scraper_spark.crawl.engine import CrawlEngine
-from realestate_scraper_spark.crawl.politeness import (
-    RobotsRules,
-    parse_robots_txt,
-    robots_allow_expr,
-)
+from realestate_scraper_spark.crawl.politeness import parse_robots_txt
 from realestate_scraper_spark.sources.synth import (
     CRAWL_DELAY_MS,
     build_corpus,
@@ -36,25 +32,6 @@ def test_parse_robots_txt_semantics():
     assert r.allows("/anything")
     assert not r.allows("/blocked/page")
     assert r.allows("/blocked/open/page")  # longest match wins
-
-
-def test_robots_expr_equals_python(spark):
-    rules = {
-        "a.com": RobotsRules("a.com", disallow=["/x", "/y/z"], allow=["/x/ok"]),
-        "b.com": RobotsRules("b.com", disallow=[]),
-    }
-    cases = [
-        ("a.com", "/x/page"), ("a.com", "/x/ok/page"), ("a.com", "/y/z"),
-        ("a.com", "/free"), ("b.com", "/x/page"), ("c.com", "/x"),
-    ]
-    df = spark.createDataFrame(cases, "domain string, path string").withColumn(
-        "allowed", robots_allow_expr(rules, F.col("domain"), F.col("path"))
-    )
-    for r in df.collect():
-        expected = (
-            rules[r["domain"]].allows(r["path"]) if r["domain"] in rules else True
-        )
-        assert r["allowed"] == expected, (r["domain"], r["path"])
 
 
 def test_robots_txt_roundtrip_matches_graph_flags():
@@ -107,7 +84,11 @@ def test_politeness_schedule_respects_budget(spark, tmp_path):
     fr = frontier_mod.seed_frontier(
         spark, [(o.source, o.url) for o in offers], n_salts=n_salts
     )
-    fetched = fetch_mod.fetch(fr, store, n_salts).collect()
+    fetched = (
+        fetch_mod.fetch_parse(fr, store, n_salts)
+        .filter(F.col("row_kind") == "page")
+        .collect()
+    )
     by_shard: dict = {}
     for r in fetched:
         if r["fetch_status"] == "OK":
@@ -241,7 +222,11 @@ def test_real_sleep_enforces_budget(spark, tmp_path):
         spark, [(o.source, o.url) for o in chosen], n_salts=1
     )
     t0 = time.monotonic()
-    rows = fetch_mod.fetch(fr, store, n_salts=1, real_sleep=True).collect()
+    rows = (
+        fetch_mod.fetch_parse(fr, store, n_salts=1, real_sleep=True)
+        .filter(F.col("row_kind") == "page")
+        .collect()
+    )
     elapsed = time.monotonic() - t0
     ok = [r for r in rows if r["fetch_status"] == "OK"]
     assert len(ok) >= 3
@@ -276,39 +261,6 @@ def test_fetch_fail_region_not_marked_done(spark, tmp_path):
     cp = {r["source"]: r.asDict() for r in eng.checkpoint_df().collect()}
     assert cp["morizon"]["done"]
     assert cp["morizon"]["last_page_done"] == 2
-
-
-def test_robots_udf_equals_expr_and_python(spark):
-    """The large-rule-set Arrow UDF gate must agree with both the pure
-    expression gate and RobotsRules.allows on every case, including the
-    longest-match and Allow-wins-ties semantics."""
-    from realestate_scraper_spark.crawl.politeness import (
-        robots_allow_udf,
-    )
-
-    rules = {
-        "a.com": RobotsRules("a.com", disallow=["/x", "/y/z"], allow=["/x/ok"]),
-        "b.com": RobotsRules("b.com", disallow=[f"/p{i}" for i in range(100)]),
-    }
-    cases = [
-        ("a.com", "/x/page"), ("a.com", "/x/ok/page"), ("a.com", "/y/z"),
-        ("a.com", "/free"), ("b.com", "/p7/deep"), ("b.com", "/q"),
-        ("c.com", "/p7"),
-    ]
-    df = spark.createDataFrame(cases, "domain string, path string")
-    udf_gate = robots_allow_udf(rules, spark)
-    out = df.select(
-        "domain", "path",
-        robots_allow_expr(rules, F.col("domain"), F.col("path")).alias("e"),
-        udf_gate(F.col("domain"), F.col("path")).alias("u"),
-    )
-    for r in out.collect():
-        expected = (
-            rules[r["domain"]].allows(r["path"])
-            if r["domain"] in rules
-            else True
-        )
-        assert r["e"] == expected and r["u"] == expected, r
 
 
 def test_missing_pages_terminal_not_retried(spark, tmp_path):
